@@ -132,17 +132,14 @@ def _term_counts_batches(batches):
 
     Fully map-side (NO shuffle): a term's positions within one doc live in
     one row. Arrow-native end to end — terms are dictionary-encoded in C++
-    (no Python string objects), position gaps are varint-encoded into ONE
-    buffer per batch and exposed as a zero-copy Arrow binary column (gaps
-    restart per (doc, term) group, so any downstream contiguous row range's
-    positions are a single buffer slice). The reference's analog is
+    (no Python string objects), and each (doc, term) group's positions are
+    encoded by codecs.encode_positions_column as one zero-copy Arrow binary
+    column per batch. The reference's analog is
     AnnotationWriter's per-doc position tracking
     (/root/reference/engine/src/main/java/nl/inl/blacklab/index/annotated/AnnotationWriter.java:267-291).
     """
     import numpy as np
     import pyarrow as pa
-
-    from blacklab_spark.codecs import varint_encode_with_lengths
 
     for rb in batches:
         toks = rb.column(rb.schema.get_field_index("tokens"))
@@ -191,10 +188,6 @@ def _term_counts_batches(batches):
         starts = np.flatnonzero(new_grp)
         ends = np.concatenate((starts[1:], [total]))
         tf = (ends - starts).astype(np.int32)
-        gaps = np.diff(p, prepend=np.int64(0))
-        gaps[starts] = p[starts]
-        buf, nb = varint_encode_with_lengths(gaps.astype(np.uint64))
-        boffs = np.concatenate(([0], np.cumsum(nb))).astype(np.int32)
 
         doc_ids = rb.column(rb.schema.get_field_index("doc_id")).to_numpy(
             zero_copy_only=False
@@ -202,19 +195,13 @@ def _term_counts_batches(batches):
         dls = rb.column(rb.schema.get_field_index("dl")).to_numpy(
             zero_copy_only=False
         )[r[starts]]
-        # zero-copy binary column: per-group byte ranges of the single buffer
-        pos_enc = pa.Array.from_buffers(
-            pa.binary(),
-            len(starts),
-            [None, pa.py_buffer(boffs[np.concatenate((starts, [total]))].tobytes()), pa.py_buffer(buf)],
-        )
         yield pa.RecordBatch.from_arrays(
             [
                 pa.array(doc_ids, pa.int64()),
                 pa.array(dls.astype(np.int32), pa.int32()),
                 dictionary.take(pa.array(c[starts])),
                 pa.array(tf, pa.int32()),
-                pos_enc,
+                codecs.encode_positions_column(p, tf),
             ],
             names=["doc_id", "dl", "term", "tf", "pos_enc"],
         )
@@ -304,78 +291,25 @@ def build_postings_frame(
         JVM→Python Arrow conversion handles ~10k list rows instead of
         ~13M flat rows (measured 6s → 0.3s at sf1: Spark's row→Arrow
         writer cost is per-ROW, so crossing the boundary with grouped
-        payloads removes the dominant postings-stage cost). Per batch,
-        everything is numpy-vectorized: three batch-wide varint encodes
-        (gaps/tfs/dls) sliced per block through zero-copy Arrow binary
-        offsets, block maxima via np.maximum.reduceat. Every emitted
-        byte and float is identical to the r6 per-block loop (pinned by
-        the old-vs-new postings md5 parity check run for this round):
-        varints are per-value, gap resets land exactly on block starts,
-        and block_max_score keeps scoring.bm25's op order (idf*tf
-        then /) elementwise before the max. A group never straddles a
-        batch (it is one row), so no carry-over logic is needed."""
+        payloads removes the dominant postings-stage cost). Each batch's
+        groups are encoded in one codecs.encode_block_batch call; only
+        block_no (salt * blocks_per_salt + block index within the group)
+        is assigned here. A group never straddles a batch (it is one
+        row), so no carry-over logic is needed."""
         import numpy as np
         import pyarrow as pa
 
-        def encode_groups(tid_g, salt_g, df_g, loffs, d, tf_i, dl_i,
-                          pos_data, pos_offs):
-            n = int(loffs[-1])
-            gstart = loffs[:-1]
-            gsize = np.diff(loffs)
-            # block starts: every bs-th row within its group (same
-            # boundaries as encode_blocks' per-group range(0, n, bs))
-            off_in_g = np.arange(n, dtype=np.int64) - np.repeat(gstart, gsize)
-            bstarts = np.flatnonzero(off_in_g % bs == 0)
-            bnd = np.concatenate((bstarts, [n]))
-            bends = bnd[1:]
-            n_blocks = bstarts.size
-            # group index of each block
-            grp = np.searchsorted(gstart, bstarts, side="right") - 1
-            # doc gaps with a restart (=0) at every block start — the
-            # per-block np.diff(d, prepend=d[0]) equivalent
-            g = np.empty(n, dtype=np.int64)
-            g[0] = 0
-            np.subtract(d[1:], d[:-1], out=g[1:])
-            g[bstarts] = 0
-            gaps_buf, gaps_nb = codecs.varint_encode_with_lengths(
-                g.astype(np.uint64)
-            )
-            tfs_buf, tfs_nb = codecs.varint_encode_with_lengths(
-                tf_i.astype(np.uint64)
-            )
-            dls_buf, dls_nb = codecs.varint_encode_with_lengths(
-                dl_i.astype(np.uint64)
-            )
-
-            def bin_col(buf, nb):
-                cum = np.concatenate(([0], np.cumsum(nb)))
-                offs = cum[bnd]
-                if len(buf) > 0x7FFFFFFF:  # >2 GiB payload: plain bytes
-                    return pa.array(
-                        [buf[offs[i]:offs[i + 1]] for i in range(n_blocks)],
-                        pa.binary(),
-                    )
-                return pa.Array.from_buffers(
-                    pa.binary(), n_blocks,
-                    [None, pa.py_buffer(offs.astype(np.int32).tobytes()),
-                     pa.py_buffer(buf)],
-                )
-
-            pos_off_b = np.asarray(pos_offs, dtype=np.int64)[bnd]
-            if len(pos_data) > 0x7FFFFFFF:
-                pos_col = pa.array(
-                    [pos_data[pos_off_b[i]:pos_off_b[i + 1]]
-                     for i in range(n_blocks)],
-                    pa.binary(),
-                )
-            else:
-                pos_col = pa.Array.from_buffers(
-                    pa.binary(), n_blocks,
-                    [None,
-                     pa.py_buffer(pos_off_b.astype(np.int32).tobytes()),
-                     pa.py_buffer(pos_data)],
-                )
-
+        for rb in batches:
+            if rb.num_rows == 0:
+                continue
+            tid_g = rb.column("term_id").to_numpy(zero_copy_only=False)
+            salt_g = rb.column("salt").to_numpy(zero_copy_only=False)
+            df_g = rb.column("df").to_numpy(zero_copy_only=False)
+            plist = rb.column("plist")
+            if isinstance(plist, pa.ChunkedArray):
+                plist = plist.combine_chunks()
+            flat = plist.flatten()  # struct values, list-sliced
+            loffs = plist.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
             # per-group idf (scoring.idf op order, elementwise float64)
             df_f = df_g.astype(np.float64)
             idf_g = np.log(
@@ -383,76 +317,20 @@ def build_postings_frame(
                 + (np.float64(nd) - df_f + np.float64(0.5))
                 / (df_f + np.float64(0.5))
             )
-            # per-posting score with scoring.bm25's exact op order:
-            # (idf * tf) / (tf + norm)
-            tf_f = np.asarray(tf_i, dtype=np.float64)
-            dl_f = np.asarray(dl_i, dtype=np.float64)
-            norm = np.float64(scoring.K1) * (
-                np.float64(1.0 - scoring.B)
-                + np.float64(scoring.B) * dl_f / np.float64(ad)
+            grp, in_grp, cols = codecs.encode_block_batch(
+                loffs - loffs[0],
+                flat.field("doc_id").to_numpy(zero_copy_only=False),
+                flat.field("tf").to_numpy(zero_copy_only=False),
+                flat.field("dl").to_numpy(zero_copy_only=False),
+                flat.field("pos_enc"),
+                idf_g, ad, bs,
             )
-            idf_rows = np.repeat(idf_g, gsize)
-            s_rows = idf_rows * tf_f / (tf_f + norm)
-            block_max_score = np.maximum.reduceat(s_rows, bstarts)
-            block_max_tf = np.maximum.reduceat(tf_i, bstarts)
-
-            # block_no = salt * blocks_per_salt + index-within-group
-            block_no = (
-                salt_g[grp] * np.int64(blocks_per_salt)
-                + off_in_g[bstarts] // bs
+            cols["term_id"] = pa.array(tid_g[grp], pa.int64())
+            cols["block_no"] = pa.array(
+                salt_g[grp] * np.int64(blocks_per_salt) + in_grp, pa.int64()
             )
-            return pa.RecordBatch.from_arrays(
-                [
-                    pa.array(tid_g[grp], pa.int64()),
-                    pa.array(block_no.astype(np.int64), pa.int64()),
-                    pa.array(d[bstarts], pa.int64()),
-                    pa.array(d[bends - 1], pa.int64()),
-                    pa.array((bends - bstarts).astype(np.int32), pa.int32()),
-                    bin_col(gaps_buf, gaps_nb),
-                    bin_col(tfs_buf, tfs_nb),
-                    bin_col(dls_buf, dls_nb),
-                    pos_col,
-                    pa.array(block_max_tf.astype(np.int32), pa.int32()),
-                    pa.array(block_max_score, pa.float64()),
-                ],
-                names=colnames,
-            )
-
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            names = {n: i for i, n in enumerate(rb.schema.names)}
-            tid_g = rb.column(names["term_id"]).to_numpy(zero_copy_only=False)
-            salt_g = rb.column(names["salt"]).to_numpy(zero_copy_only=False)
-            df_g = rb.column(names["df"]).to_numpy(zero_copy_only=False)
-            plist = rb.column(names["plist"])
-            if isinstance(plist, pa.ChunkedArray):
-                plist = plist.combine_chunks()
-            flat = plist.flatten()  # struct values, list-sliced
-            loffs = plist.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-            loffs = loffs - loffs[0]
-            d = flat.field("doc_id").to_numpy(zero_copy_only=False).astype(
-                np.int64, copy=False
-            )
-            tf_i = flat.field("tf").to_numpy(zero_copy_only=False)
-            dl_i = flat.field("dl").to_numpy(zero_copy_only=False)
-            pe = flat.field("pos_enc")
-            # BinaryArray buffers: [validity, int32 offsets, data]
-            bufs = pe.buffers()
-            raw_offs = np.frombuffer(bufs[1], dtype=np.int32)
-            offs = raw_offs[pe.offset: pe.offset + len(pe) + 1].astype(np.int64)
-            data = (
-                np.frombuffer(bufs[2], dtype=np.uint8)
-                if bufs[2] is not None
-                else np.zeros(0, np.uint8)
-            )
-            base = offs[0]
-            pos_data = data[base:offs[-1]].tobytes()
-            pos_offs = offs - base
-            if len(tid_g) == 0:
-                continue
-            yield encode_groups(
-                tid_g, salt_g, df_g, loffs, d, tf_i, dl_i, pos_data, pos_offs
+            yield pa.RecordBatch.from_arrays(
+                [cols[c] for c in colnames], names=colnames
             )
 
     # r7 plan shape (guide §2.4/§4.1): exactly ONE exchange carries the

@@ -6,16 +6,18 @@ with DataFrame plans:
 
   * term lookup       → term_dict parquet scan with pushed-down predicate
                         (≈ Lucene TermsEnum seek)
-  * postings decode   → mapInPandas vectorized varint decode + BM25 in numpy
-                        (≈ PostingsEnum walk, but Arrow-batched)
+  * postings decode   → codecs.decode_blocks: every Arrow batch of posting
+                        blocks decoded in one vectorized call, BM25 in numpy
+                        (≈ PostingsEnum walk, but block-batched)
   * rarest-first      → query terms processed in df-ascending order — the
                         WAND ordering; the reference's cost-model analog is
                         ClauseCombinerNfa.getFactor (/root/reference/engine/src/
                         main/java/nl/inl/blacklab/search/lucene/optimize/
                         ClauseCombinerNfa.java:144-201)
-  * block-max pruning → single-term top-k skips blocks whose exact
-                        block_max_score cannot beat the running k-th score
-                        (block-max WAND over a bounded heap, partition-local)
+  * block-max pruning → single-term top-k decodes the best blocks first,
+                        takes the k-th best score θ among them and drops
+                        every block whose exact block_max_score < θ
+                        (threshold block-max WAND, partition-local)
   * top-k             → orderBy(score desc, doc_id asc).limit(k) — Spark
                         compiles this to TakeOrderedAndProject (bounded
                         per-partition heaps + driver merge, no global sort)
@@ -28,11 +30,9 @@ rank of the term string), bitwise-identical to the oracle's accumulation.
 
 from __future__ import annotations
 
-import heapq
 import json
 import os
 from dataclasses import dataclass
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -48,6 +48,44 @@ _DECODED_SCHEMA = "term_id long, doc_id long, contrib double"
 _DECODED_POS_SCHEMA = (
     "term_id long, doc_id long, tf int, dl int, positions array<long>"
 )
+
+
+def _decode(blocks, positions: bool = False) -> codecs.Postings:
+    """Decode a frame of posting blocks (pandas DataFrame or Arrow
+    RecordBatch) in one codecs.decode_blocks call."""
+    return codecs.decode_blocks(
+        blocks["first_doc_id"], blocks["doc_gaps"], blocks["tfs"],
+        blocks["dls"], blocks["positions"] if positions else None,
+    )
+
+
+def _member(cands: np.ndarray, d: np.ndarray) -> np.ndarray:
+    """Elementwise d ∈ cands, for sorted unique non-empty cands."""
+    idx = np.searchsorted(cands, d)
+    m = idx < cands.size
+    m &= np.where(m, cands[np.minimum(idx, cands.size - 1)] == d, False)
+    return m
+
+
+def _overlapping(cands: np.ndarray, blocks: pd.DataFrame) -> np.ndarray:
+    """Block skip: which blocks' [first_doc_id, last_doc_id] windows hold at
+    least one of the sorted unique non-empty candidate docs."""
+    li = np.searchsorted(cands, blocks["first_doc_id"].to_numpy())
+    keep = li < cands.size
+    keep &= np.where(
+        keep,
+        cands[np.minimum(li, cands.size - 1)] <= blocks["last_doc_id"].to_numpy(),
+        False,
+    )
+    return keep
+
+
+def _topk(d: np.ndarray, s: np.ndarray, k: int) -> tuple[np.ndarray, np.ndarray]:
+    """The k best (doc, score) pairs under (score desc, doc_id asc)."""
+    if d.size > k:
+        top = np.lexsort((d, -s))[:k]
+        d, s = d[top], s[top]
+    return d, s
 
 
 @dataclass
@@ -276,79 +314,82 @@ class Corpus:
 
     # ------------------------------------------------------------- decode --
     def _decoded_scores(self, tinfo: pd.DataFrame, k_hint: int | None = None) -> DataFrame:
-        """postings(filtered to query terms) → (term_id, doc_id, contrib).
+        """One term's postings → (term_id, doc_id, contrib).
 
-        Single-term queries with k_hint get partition-local block-max WAND:
-        blocks are visited in descending block_max_score order and skipped
-        once the local top-k heap's floor exceeds the next block's bound.
+        With k_hint each partition keeps only its local top-k, by threshold
+        block-max WAND: blocks are visited in descending block_max_score
+        order, the first ones holding ≥k postings are decoded, θ = the k-th
+        best score among them, every remaining block with
+        block_max_score < θ is dropped (strict, so ties at θ survive) and
+        the rest decoded. The running top-k is flushed once at partition
+        end (per-batch flushes would duplicate docs).
         """
-        term_ids = [int(t) for t in tinfo["term_id"]]
-        idf_map = {
-            int(r.term_id): scoring.idf(self.n_docs, int(r.df))
-            for r in tinfo.itertuples()
-        }
+        tid = int(tinfo["term_id"].iloc[0])
+        idf_val = scoring.idf(self.n_docs, int(tinfo["df"].iloc[0]))
         avgdl = self.avgdl
         # block-max bounds are stale after an incremental append (df/avgdl
         # moved) — prune only when the index is compacted (bounds fresh)
-        single_wand = (
-            k_hint is not None
-            and len(term_ids) == 1
-            and not self.meta.get("bounds_stale", False)
-        )
-        k = k_hint or 0
+        k = 0 if self.meta.get("bounds_stale", False) else int(k_hint or 0)
 
-        blocks = self.postings.filter(F.col("term_id").isin(term_ids)).select(
-            "term_id", "first_doc_id", "doc_gaps", "tfs", "dls", "block_max_score"
+        blocks = self.postings.filter(F.col("term_id").isin([tid])).select(
+            "first_doc_id", "num_docs", "doc_gaps", "tfs", "dls",
+            "block_max_score",
         )
 
-        def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            # partition-local bounded min-heap of (score, -doc_id); flushed
-            # ONCE at partition end (per-batch flushes would duplicate docs)
-            heap: list[tuple[float, int]] = []
-            for pdf in batches:
-                if single_wand:
-                    pdf = pdf.sort_values("block_max_score", ascending=False)
-                out = []
-                for row in pdf.itertuples():  # loop over BLOCKS, not postings
-                    if single_wand and len(heap) >= k and row.block_max_score < heap[0][0]:
-                        continue  # block-max prune: bound can't beat current k-th
-                    d, t, l = codecs.decode_block({
-                        "first_doc_id": row.first_doc_id,
-                        "doc_gaps": row.doc_gaps,
-                        "tfs": row.tfs,
-                        "dls": row.dls,
-                    })
-                    contrib = scoring.bm25(t, l, avgdl, idf_map[int(row.term_id)])
-                    if single_wand:
-                        for s, doc in zip(contrib, d):
-                            item = (float(s), -int(doc))
-                            if len(heap) < k:
-                                heapq.heappush(heap, item)
-                            elif item > heap[0]:
-                                heapq.heapreplace(heap, item)
-                    else:
-                        out.append(pd.DataFrame({
-                            "term_id": np.full(len(d), row.term_id, dtype="int64"),
-                            "doc_id": d,
-                            "contrib": contrib,
-                        }))
-                if out:
-                    yield pd.concat(out, ignore_index=True)
-            if single_wand and heap:
-                yield pd.DataFrame({
-                    "term_id": np.full(len(heap), term_ids[0], dtype="int64"),
-                    "doc_id": np.array([-x[1] for x in heap], dtype="int64"),
-                    "contrib": np.array([x[0] for x in heap], dtype="float64"),
-                })
+        def decode(batches):
+            import pyarrow as pa
 
-        return blocks.mapInPandas(decode, schema=_DECODED_SCHEMA)
+            def scored(rb):
+                p = _decode(rb)
+                return p.doc_ids, scoring.bm25(p.tfs, p.dls, avgdl, idf_val)
+
+            def merge(top, rb):
+                d, s = scored(rb)
+                return _topk(
+                    np.concatenate((top[0], d)), np.concatenate((top[1], s)), k
+                )
+
+            def out(d, s):
+                return pa.RecordBatch.from_arrays(
+                    [
+                        pa.array(np.full(d.size, tid, dtype=np.int64)),
+                        pa.array(d, pa.int64()),
+                        pa.array(s, pa.float64()),
+                    ],
+                    names=["term_id", "doc_id", "contrib"],
+                )
+
+            top = (np.zeros(0, dtype=np.int64), np.zeros(0, dtype=np.float64))
+            for rb in batches:
+                if rb.num_rows == 0:
+                    continue
+                if not k:
+                    yield out(*scored(rb))
+                    continue
+                bmax = rb.column("block_max_score").to_numpy(zero_copy_only=False)
+                order = np.argsort(-bmax, kind="stable")
+                rb, bmax = rb.take(pa.array(order)), bmax[order]
+                # the best blocks until they, with the running top-k, hold ≥k
+                held = top[0].size + np.cumsum(
+                    rb.column("num_docs").to_numpy(zero_copy_only=False)
+                )
+                head = 0 if top[0].size >= k else int(np.searchsorted(held, k)) + 1
+                top = merge(top, rb.slice(0, head))
+                if top[0].size >= k:  # θ = top[1].min(), the k-th best score
+                    rest = head + np.flatnonzero(bmax[head:] >= top[1].min())
+                    top = merge(top, rb.take(pa.array(rest)))
+            if k and top[0].size:
+                yield out(*top)
+
+        return blocks.mapInArrow(decode, schema=_DECODED_SCHEMA)
 
     def _decoded_positions(self, tinfo: pd.DataFrame) -> DataFrame:
         """postings → (term_id, doc_id, tf, dl, positions) for phrase matching.
 
-        Arrow-native: the per-doc position lists are emitted as ONE ListArray
-        built from (offsets = cumsum(tf), values = vectorized varint decode) —
-        no Python list objects, so stop-word phrases decode at memory speed.
+        Arrow-native: each batch of blocks is decoded in one
+        codecs.decode_blocks call and the per-doc position lists are emitted
+        as ONE ListArray (offsets = cumsum(tf)) — no Python list objects, so
+        stop-word phrases decode at memory speed.
         """
         term_ids = [int(t) for t in tinfo["term_id"]]
         blocks = self.postings.filter(F.col("term_id").isin(term_ids)).select(
@@ -359,40 +400,20 @@ class Corpus:
             import pyarrow as pa
 
             for rb in batches:
-                names = {n: i for i, n in enumerate(rb.schema.names)}
-                tid_col = rb.column(names["term_id"]).to_numpy(zero_copy_only=False)
-                first_col = rb.column(names["first_doc_id"]).to_numpy(zero_copy_only=False)
-                gaps_col = rb.column(names["doc_gaps"])
-                tfs_col = rb.column(names["tfs"])
-                dls_col = rb.column(names["dls"])
-                pos_col = rb.column(names["positions"])
-                tids, docs, tfs_a, dls_a, vals = [], [], [], [], []
-                for i in range(rb.num_rows):
-                    d, t, l = codecs.decode_block({
-                        "first_doc_id": int(first_col[i]),
-                        "doc_gaps": gaps_col[i].as_py(),
-                        "tfs": tfs_col[i].as_py(),
-                        "dls": dls_col[i].as_py(),
-                    })
-                    vals.append(codecs.decode_positions(pos_col[i].as_py(), t))
-                    tids.append(np.full(len(d), tid_col[i], dtype="int64"))
-                    docs.append(d)
-                    tfs_a.append(t)
-                    dls_a.append(l)
-                if not docs:
+                if rb.num_rows == 0:
                     continue
-                tf_all = np.concatenate(tfs_a)
-                offsets = np.concatenate(([0], np.cumsum(tf_all))).astype("int32")
-                positions = pa.ListArray.from_arrays(
-                    pa.array(offsets), pa.array(np.concatenate(vals), pa.int64())
-                )
+                p = _decode(rb, positions=True)
+                tids = rb.column("term_id").to_numpy(zero_copy_only=False)
+                offsets = np.concatenate(([0], np.cumsum(p.tfs))).astype("int32")
                 yield pa.RecordBatch.from_arrays(
                     [
-                        pa.array(np.concatenate(tids), pa.int64()),
-                        pa.array(np.concatenate(docs), pa.int64()),
-                        pa.array(tf_all.astype("int32"), pa.int32()),
-                        pa.array(np.concatenate(dls_a).astype("int32"), pa.int32()),
-                        positions,
+                        pa.array(tids[p.block], pa.int64()),
+                        pa.array(p.doc_ids, pa.int64()),
+                        pa.array(p.tfs.astype("int32"), pa.int32()),
+                        pa.array(p.dls.astype("int32"), pa.int32()),
+                        pa.ListArray.from_arrays(
+                            pa.array(offsets), pa.array(p.positions, pa.int64())
+                        ),
                     ],
                     names=["term_id", "doc_id", "tf", "dl", "positions"],
                 )
@@ -400,34 +421,6 @@ class Corpus:
         return blocks.mapInArrow(decode, schema=_DECODED_POS_SCHEMA)
 
     # ----------------------------------------------------- postings leaves --
-    def term_postings(self, term: str) -> DataFrame:
-        """Postings walk: (doc_id, tf) for one term, decoded from the inverted
-        index — the leaf BlackLab reads via PostingsEnum (/root/reference/
-        engine/src/main/java/nl/inl/blacklab/search/lucene/BLSpanTermQuery.java),
-        NOT a full-corpus re-tokenize scan."""
-        tinfo = self.lookup_terms([term])
-        if tinfo.empty:
-            return self.spark.createDataFrame([], "doc_id long, tf int")
-        blocks = self.postings.filter(
-            F.col("term_id").isin([int(t) for t in tinfo["term_id"]])
-        ).select("first_doc_id", "doc_gaps", "tfs", "dls")
-
-        def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                out = []
-                for row in pdf.itertuples():
-                    d, t, _ = codecs.decode_block({
-                        "first_doc_id": row.first_doc_id,
-                        "doc_gaps": row.doc_gaps,
-                        "tfs": row.tfs,
-                        "dls": row.dls,
-                    })
-                    out.append(pd.DataFrame({"doc_id": d, "tf": t.astype("int32")}))
-                if out:
-                    yield pd.concat(out, ignore_index=True)
-
-        return blocks.mapInPandas(decode, schema="doc_id long, tf int")
-
     def term_positions(self, term: str) -> DataFrame:
         """(doc_id, tf, positions array<long>) for one term from the
         positional postings (positions ascending per doc)."""
@@ -588,7 +581,7 @@ class Corpus:
                 "positions_chain: docs-per-range too large for key packing; "
                 "raise spark.sql.shuffle.partitions"
             )
-        clause_keys = [(lyr, tids) for _, lyr, tids, _ in infos]
+        clauses_by_rarity = [(lyr, tids) for _, lyr, tids, _ in infos]
         clause_offs = [off for _, _, _, off in infos]
 
         def _blocks(lyr, tids, role):
@@ -631,111 +624,51 @@ class Corpus:
         def chain_range(pdf: pd.DataFrame) -> pd.DataFrame:
             rng = int(pdf["rng"].iloc[0])
             lo, hi = rng * R, (rng + 1) * R
-            by_tid = {
-                (int(lyr), int(tid)): g
-                for (lyr, tid), g in
-                pdf[pdf["role"] == 0].groupby(["lyr", "term_id"])
-            }
+            role = pdf["role"].to_numpy()
+            lyr_col = pdf["lyr"].to_numpy()
+            tid_col = pdf["term_id"].to_numpy()
 
-            def member(cands, d):
-                idx = np.searchsorted(cands, d)
-                m = idx < cands.size
-                m &= np.where(m, cands[np.minimum(idx, cands.size - 1)] == d, False)
-                return m
-
-            running = None
-            dl_docs, dl_vals = [], []  # exact dl, collected on the first clause
-            for ci, (lyr, tids) in enumerate(clause_keys):
-                off = clause_offs[ci]
-                cand = None
-                if running is not None:
-                    if running.size == 0:
-                        return empty_pdf
-                    cand = lo + np.unique(running // DOC_MULT)
-                parts = []
-                for tid in tids:
-                    g = by_tid.get((lyr, tid))
-                    if g is None:
-                        continue
-                    if cand is not None:
-                        fi = g["first_doc_id"].to_numpy()
-                        la = g["last_doc_id"].to_numpy()
-                        li = np.searchsorted(cand, fi)
-                        keep = li < cand.size
-                        keep &= np.where(
-                            keep, cand[np.minimum(li, cand.size - 1)] <= la, False
-                        )
-                        g = g[keep]
-                        if len(g) == 0:
-                            continue
-                    for row in g.itertuples():
-                        d, t, l = codecs.decode_block({
-                            "first_doc_id": row.first_doc_id,
-                            "doc_gaps": row.doc_gaps,
-                            "tfs": row.tfs,
-                            "dls": row.dls,
-                        })
-                        m = (d >= lo) & (d < hi)
-                        if cand is not None:
-                            m &= member(cand, d)
-                        if not m.any():
-                            continue
-                        if with_dl and ci == 0:
-                            dl_docs.append((d - lo)[m])
-                            dl_vals.append(l[m])
-                        vals = codecs.decode_positions(row.positions, t)
-                        pm = np.repeat(m, t)
-                        rel = np.repeat(d - lo, t)[pm]
-                        parts.append(
-                            rel * DOC_MULT + (vals[pm] - off + POS_BIAS)
-                        )
-                if not parts:
-                    return empty_pdf
-                keys = np.concatenate(parts)
+            def clause_keys(sel, cand):
+                """Blocks `sel` → sorted unique (doc, position) keys of their
+                postings in this range (and in `cand`, when given), plus the
+                kept postings' (range-relative doc, dl)."""
+                g = pdf[sel]
+                if cand is not None:
+                    g = g[_overlapping(cand, g)]
+                p = _decode(g, positions=True)
+                m = (p.doc_ids >= lo) & (p.doc_ids < hi)
+                if cand is not None:
+                    m &= _member(cand, p.doc_ids)
+                rel = p.doc_ids - lo
+                pm = np.repeat(m, p.tfs)
+                keys = np.repeat(rel, p.tfs)[pm] * DOC_MULT + p.positions[pm]
                 # multi-term clauses (regex expansions, synonyms) can repeat
                 # a (doc, position); unique also sorts for the intersect
-                keys = np.unique(keys)
+                return np.unique(keys + POS_BIAS), rel[m], p.dls[m]
+
+            running = None
+            for ci, (lyr, tids) in enumerate(clauses_by_rarity):
+                cand = None
+                if running is not None:
+                    cand = lo + np.unique(running // DOC_MULT)
+                keys, dl_docs, dl_vals = clause_keys(
+                    (role == 0) & (lyr_col == lyr) & np.isin(tid_col, tids), cand
+                )
+                keys -= clause_offs[ci]
                 running = keys if running is None else np.intersect1d(
                     running, keys, assume_unique=True
                 )
                 if running.size == 0:
                     return empty_pdf
+                if ci == 0:  # exact dl, collected on the first clause
+                    first_docs, first_dls = dl_docs, dl_vals
             if tail_tids:  # plain-data flag: the closure must not capture
                 #            vargap_tail (it may hold a Corpus → SparkContext)
                 # the variable-gap tail, same decode + candidate skipping;
                 # one intersect per gap value, spans out
-                cand = lo + np.unique(running // DOC_MULT)
-                parts = []
-                tby = tail_by_tid(pdf)  # one groupby, reused across tail terms
-                for tid in tail_tids:
-                    g = tby.get(tid)
-                    if g is None:
-                        continue
-                    fi = g["first_doc_id"].to_numpy()
-                    la = g["last_doc_id"].to_numpy()
-                    li = np.searchsorted(cand, fi)
-                    keep = li < cand.size
-                    keep &= np.where(
-                        keep, cand[np.minimum(li, cand.size - 1)] <= la, False
-                    )
-                    g = g[keep]
-                    for row in g.itertuples():
-                        d, t, _l = codecs.decode_block({
-                            "first_doc_id": row.first_doc_id,
-                            "doc_gaps": row.doc_gaps,
-                            "tfs": row.tfs,
-                            "dls": row.dls,
-                        })
-                        m = (d >= lo) & (d < hi) & member(cand, d)
-                        if not m.any():
-                            continue
-                        vals = codecs.decode_positions(row.positions, t)
-                        pm = np.repeat(m, t)
-                        rel = np.repeat(d - lo, t)[pm]
-                        parts.append(rel * DOC_MULT + vals[pm] + POS_BIAS)
-                if not parts:
-                    return empty_pdf
-                tail_keys = np.unique(np.concatenate(parts))
+                tail_keys, _, _ = clause_keys(
+                    role == 1, lo + np.unique(running // DOC_MULT)
+                )
                 outs = []
                 for s in shifts:
                     hit = np.intersect1d(
@@ -760,18 +693,10 @@ class Corpus:
                 "positions": np.split(start.astype("int64"), idx[1:]),
             }
             if with_dl:
-                dd = np.concatenate(dl_docs)
-                ll = np.concatenate(dl_vals)
-                srt = np.argsort(dd)
-                dd, ll = dd[srt], ll[srt]
+                srt = np.argsort(first_docs)
+                dd, ll = first_docs[srt], first_dls[srt]
                 out["dl"] = ll[np.searchsorted(dd, ud)].astype("int32")
             return pd.DataFrame(out)
-
-        def tail_by_tid(pdf):
-            return {
-                int(tid): g
-                for tid, g in pdf[pdf["role"] == 1].groupby("term_id")
-            }
 
         # r7 (guide §2.5 "stragglers"/AQE interaction): the compressed-block
         # shuffle is tiny (a few MB), so AQE's partition coalescing merged
@@ -944,32 +869,11 @@ class Corpus:
         )
 
         def _decode_group(g, lo, hi, tid):
-            dd, tt, ll = [], [], []
-            for row in g.itertuples():  # loop over BLOCKS, not postings
-                d, t, l = codecs.decode_block({
-                    "first_doc_id": row.first_doc_id,
-                    "doc_gaps": row.doc_gaps,
-                    "tfs": row.tfs,
-                    "dls": row.dls,
-                })
-                dd.append(d)
-                tt.append(t)
-                ll.append(l)
-            d = np.concatenate(dd)
-            m = (d >= lo) & (d < hi)
-            d = d[m]
-            contrib = scoring.bm25(
-                np.concatenate(tt)[m], np.concatenate(ll)[m], avgdl, idf_map[tid]
+            p = _decode(g)
+            m = (p.doc_ids >= lo) & (p.doc_ids < hi)
+            return p.doc_ids[m], scoring.bm25(
+                p.tfs[m], p.dls[m], avgdl, idf_map[tid]
             )
-            return d, contrib
-
-        def _member(cands, d):
-            idx = np.searchsorted(cands, d)
-            memb = idx < cands.size
-            memb &= np.where(
-                memb, cands[np.minimum(idx, cands.size - 1)] == d, False
-            )
-            return memb
 
         def _fold_topk(parts, key2_per_part):
             """parts: [(d, contrib)]; key2_per_part: the (gid, t_ord) or
@@ -985,9 +889,8 @@ class Corpus:
             for j in range(int(counts.max())):
                 sel = counts > j
                 score[sel] += c[starts[sel] + j]
-            if kk is not None and ud.size > kk:
-                topk = np.lexsort((ud, -score))[:kk]
-                ud, score = ud[topk], score[topk]
+            if kk is not None:
+                ud, score = _topk(ud, score, kk)
             return pd.DataFrame({"doc_id": ud.astype("int64"), "score": score})
 
         def score_range_or(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -1042,16 +945,7 @@ class Corpus:
                         if cands is not None:
                             if cands.size == 0:
                                 return empty_pdf
-                            fi = g["first_doc_id"].to_numpy()
-                            la = g["last_doc_id"].to_numpy()
-                            li = np.searchsorted(cands, fi)
-                            keep = li < cands.size
-                            keep &= np.where(
-                                keep,
-                                cands[np.minimum(li, cands.size - 1)] <= la,
-                                False,
-                            )
-                            g = g[keep]
+                            g = g[_overlapping(cands, g)]
                             if len(g) == 0:
                                 decoded[tid] = (
                                     np.zeros(0, dtype=np.int64),

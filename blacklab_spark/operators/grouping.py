@@ -28,8 +28,6 @@ columnar forward index — so they scale as pure map+shuffle-agg plans.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -91,9 +89,9 @@ def group_hits_by_meta(docs: DataFrame, term: str, meta_col: str) -> DataFrame:
 # join). A capped count probes the hits side's true size; when it is small
 # the hits are broadcast and the docs side is scanned in place — zero
 # exchange on the heavy side. Above the cap (the "every hit of a stop
-# word at 100 TB" case) the original shuffle join stands. Cap is
-# parameterised; 500k hit rows ≈ 25 MB broadcast.
-_BROADCAST_HITS_CAP = int(os.environ.get("BLACKLAB_BROADCAST_HITS_CAP", "500000"))
+# word at 100 TB" case) the original shuffle join stands. 500k hit rows
+# ≈ 25 MB broadcast.
+_BROADCAST_HITS_CAP = 500_000
 
 
 def _hits_for_docs_join(h: DataFrame) -> DataFrame:

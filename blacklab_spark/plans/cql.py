@@ -1274,12 +1274,7 @@ class CqlCompiler:
         for annot, terms, off in run:
             ti = self._layer(annot).lookup_terms(terms)
             infos.append((int(ti["df"].sum()) if len(ti) else 0, annot, terms, off))
-        # BLACKLAB_SEQ_ORDER=left restores the pre-r4 left-to-right order —
-        # kept ONLY as the A/B baseline for benchmark evidence
-        if os.environ.get("BLACKLAB_SEQ_ORDER") == "left":
-            infos.sort(key=lambda t: t[3])
-        else:
-            infos.sort(key=lambda t: (t[0], t[3]))
+        infos.sort(key=lambda t: (t[0], t[3]))
         acc_p = None
         for _, annot, terms, off in infos:
             p = self._layer(annot).positions_of_terms(terms)

@@ -34,15 +34,16 @@ def idf(n_docs: int, df: int) -> float:
     return float(np.log(np.float64(1.0) + (n - d + np.float64(0.5)) / (d + np.float64(0.5))))
 
 
-def bm25(tf, dl, avgdl: float, idf_val: float):
-    """Vectorized BM25 for one term. tf/dl may be numpy arrays (float64 result).
+def bm25(tf, dl, avgdl: float, idf_val):
+    """Vectorized BM25. tf/dl may be numpy arrays (float64 result); idf_val
+    is one term's idf or an array of per-posting idfs.
 
     norm = k1 * (1 - b + b * dl/avgdl); score = idf * tf / (tf + norm).
     """
     tf = np.asarray(tf, dtype=np.float64)
     dl = np.asarray(dl, dtype=np.float64)
     norm = np.float64(K1) * (np.float64(1.0 - B) + np.float64(B) * dl / np.float64(avgdl))
-    return np.float64(idf_val) * tf / (tf + norm)
+    return np.asarray(idf_val, dtype=np.float64) * tf / (tf + norm)
 
 
 def bm25_upper_bound(tf, dl, avgdl: float, idf_val: float) -> float:

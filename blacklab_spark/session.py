@@ -2,9 +2,20 @@
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
+
+_log = logging.getLogger(__name__)
+
+
+def _host_driver_memory() -> str:
+    """Driver heap sized from the host: 40% of physical memory in whole GiB
+    (6g on a 16 GB host), at least 1g. The rest stays free for the Python
+    workers and for the RAM-backed shuffle dir (/dev/shm)."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, int(phys * 0.4) >> 30)}g"
 
 
 def get_spark(
@@ -19,6 +30,9 @@ def get_spark(
     shuffle.partitions ≈ cores for local runs (the 200 default over-
     parallelizes tiny data and under-parallelizes huge data); on a real
     cluster AQE coalescing re-plans at runtime anyway.
+
+    driver_memory=None → $SPARK_GRAFT_DRIVER_MEM if set, else
+    _host_driver_memory(); the value chosen is logged.
     """
     if cores is None:
         env = os.environ.get("SPARK_GRAFT_CPUS")
@@ -28,6 +42,12 @@ def get_spark(
         master = f"local[{cores}]"
         n = cores
     sp = shuffle_partitions if shuffle_partitions is not None else max(n, 4)
+    heap = (
+        driver_memory
+        or os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+        or _host_driver_memory()
+    )
+    _log.info("spark.driver.memory=%s", heap)
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
@@ -38,19 +58,19 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .config("spark.driver.memory", driver_memory or os.environ.get("SPARK_GRAFT_DRIVER_MEM", "64g"))
+        .config("spark.driver.memory", heap)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.shuffle.spill.compress", "true")
     )
     # Local-mode shuffle files on slow virtio disks serialize under many
     # threads (measured 9x degradation at 32 tasks); put them on tmpfs when
     # one is available. On a real cluster this is the usual fast local SSD.
-    shm = os.environ.get("SPARK_GRAFT_LOCAL_DIR")
-    if shm is None and os.path.isdir("/dev/shm"):
-        shm = "/dev/shm/spark-local"
-    if shm:
-        os.makedirs(shm, exist_ok=True)
-        builder = builder.config("spark.local.dir", shm)
+    # Spark itself prefers $SPARK_LOCAL_DIRS over spark.local.dir
+    # (Utils.getConfiguredLocalDirs), so the tmpfs default applies only
+    # when that is unset.
+    if "SPARK_LOCAL_DIRS" not in os.environ and os.path.isdir("/dev/shm"):
+        os.makedirs("/dev/shm/spark-local", exist_ok=True)
+        builder = builder.config("spark.local.dir", "/dev/shm/spark-local")
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

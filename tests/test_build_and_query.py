@@ -312,3 +312,52 @@ def test_query_string_api(fixture_idx):
     got = rows(c.search("qu*", k=5))
     exp_terms = sorted(t for t in oi.postings if t.startswith("qu"))
     assert got == orc.topk_or(oi, exp_terms, 5)
+
+
+@pytest.fixture(scope="module")
+def tied_idx(spark, tmp_root):
+    """48 docs holding 'alpha': most tie exactly (tf=1, dl=3), two score
+    higher (tf=2) and some lower (dl=7). block_size=4 → 12 blocks, 9+ of
+    them made only of docs tied at the same score."""
+    import pandas as pd
+
+    texts = []
+    for i in range(48):
+        if i in (13, 30):
+            texts.append(f"alpha alpha w{i}")
+        elif i % 11 == 5:
+            texts.append(f"alpha w{i} b c d e f")
+        else:
+            texts.append(f"alpha w{i} x")
+    pdf = pd.DataFrame({
+        "conv_id": ["c"] * len(texts),
+        "turn_idx": np.arange(len(texts), dtype=np.int32),
+        "text": texts,
+    })
+    path = f"{tmp_root}/tied_idx"
+    build_index(spark, to_spark(spark, pdf), path, block_size=4)
+    oi = orc.build_oracle_index(list(enumerate(texts)))
+    return path, oi
+
+
+@pytest.mark.parametrize("batch_rows", [None, "3"])
+def test_single_term_wand_ties_across_blocks(spark, tied_idx, batch_rows):
+    """Single-term block-max WAND with ties at the k-th score spanning more
+    than two blocks, k straddling a block boundary: equal to the oracle and
+    to the unpruned (bounds_stale) path. batch_rows=3 splits a partition's
+    blocks over many Arrow batches, so the running top-k carries across."""
+    path, oi = tied_idx
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    try:
+        if batch_rows:
+            spark.conf.set(conf, batch_rows)
+        pruned = Corpus(spark, path)
+        unpruned = Corpus(spark, path)
+        unpruned.meta["bounds_stale"] = True
+        for k in (1, 2, 3, 6, 9, 14, 30, 48, 60):
+            exp = orc.topk_term(oi, "alpha", k)
+            assert rows(pruned.search_or(["alpha"], k=k)) == exp, k
+            assert rows(unpruned.search_or(["alpha"], k=k)) == exp, k
+    finally:
+        spark.conf.set(conf, old)
